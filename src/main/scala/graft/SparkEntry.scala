@@ -2438,34 +2438,18 @@ object SparkEntry {
       // (centroid/codebook reads, probed-list collects, assignment
       // collects) — construct them concurrently (guide §2.6) so those
       // tiny jobs overlap; the frames and their union are unchanged
-      def legsOf(pass: Int): DataFrame = {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try Seq(
-            scala.concurrent.Future(ivfLeg(pass, "flat")),
-            scala.concurrent.Future(ivfLeg(pass, "pq")),
-            scala.concurrent.Future(semFound(pass)))
-          .map(scala.concurrent.Await.result(_,
-            scala.concurrent.duration.Duration.Inf))
-          .reduce(_ unionByName _)
-        finally pool.shutdown()
-      }
+      def legsOf(pass: Int): DataFrame = graft.core.Par.all(3)(Seq(
+          () => ivfLeg(pass, "flat"), () => ivfLeg(pass, "pq"),
+          () => semFound(pass)))
+        .reduce(_ unionByName _)
       // pass 1 PINNED before the takedown rewrites the index files
       val pass1 = graft.core.Lineage.pin(legsOf(1))
       // the two deletes are independent single-writer stores — concurrent,
-      // like Takedown.run's index fan-out
-      val delPool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val delEc: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(delPool)
-      val (removedIvf, removedSem) = try {
-        val fi = scala.concurrent.Future(
-          IvfIndex.delete(spark, ivfDir, victims.select("vec_id")))(delEc)
-        val fse = scala.concurrent.Future(
-          SemIndex.delete(spark, semDir, victims.select("vec_id")))(delEc)
-        (scala.concurrent.Await.result(fi, scala.concurrent.duration.Duration.Inf),
-          scala.concurrent.Await.result(fse, scala.concurrent.duration.Duration.Inf))
-      } finally delPool.shutdown()
+      // like Takedown.run's index fan-out: both settle before either's
+      // failure surfaces
+      val Seq(removedIvf, removedSem) = graft.core.Par.all(2)(Seq(
+        () => IvfIndex.delete(spark, ivfDir, victims.select("vec_id")),
+        () => SemIndex.delete(spark, semDir, victims.select("vec_id"))))
       val deletesOk = removedIvf == nVictims && removedSem == nVictims
       val pass2 = legsOf(2)
       pass1.unionByName(pass2)

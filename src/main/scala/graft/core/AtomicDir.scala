@@ -12,17 +12,18 @@ import org.apache.spark.sql.SparkSession
   * side by completing the interrupted rename.
   *
   * One implementation for every persistent index ([[graft.llm.SemIndex]],
-  * [[graft.llm.SpanIndex]], [[graft.llm.MinhashIndex]]) — the crash-safety
-  * invariants live here, not in per-index copies.
+  * [[graft.llm.SpanIndex]], [[graft.llm.MinhashIndex]], their params via
+  * [[StoreParams]]) — the crash-safety invariants live here, not in
+  * per-index copies.
   */
 object AtomicDir {
 
   private def tmpPath(liveDir: String) = new Path(liveDir + "_tmp")
 
   /** Replace `liveDir`: `writeTmp` writes the COMPLETE new copy to the
-    * tmp path it is given (typically a Spark `mode("overwrite")` write —
-    * overwriting the tmp dir also absorbs leftovers of a crash mid-tmp-
-    * write), then delete-live + checked-rename swaps it in. */
+    * tmp path it is given and must replace whatever a crash mid-tmp-write
+    * left there (a Spark `mode("overwrite")` write does; [[StoreParams]]
+    * deletes it first), then delete-live + checked-rename swaps it in. */
   def swap(spark: SparkSession, liveDir: String)(writeTmp: String => Unit): Unit = {
     val live = new Path(liveDir)
     val tmp = tmpPath(liveDir)

@@ -31,28 +31,31 @@ object AuditLog {
     sb.append('"').toString
   }
 
-  /** Write one record to `logDir/<runId>.json`. Values render as JSON
-    * numbers when numeric, strings (escaped) otherwise; `runId` and
+  /** One JSON object on one line: values render as JSON numbers when
+    * numeric, strings (escaped) otherwise. Shared with [[StoreParams]]. */
+  private[core] def render(fields: Seq[(String, Any)]): String =
+    fields.map {
+      case (k, v: Long) => s"${jstr(k)}:$v"
+      case (k, v: Int) => s"${jstr(k)}:$v"
+      // Double/Boolean must render as JSON values too — a quoted "0.95"
+      // under a DoubleType read schema silently reads back NULL, which
+      // for an audit trail is evidence loss. Non-finite doubles have no
+      // JSON form; they quote (and a reader wanting them numeric should
+      // not be storing NaN as evidence in the first place).
+      case (k, v: Double) if !v.isNaN && !v.isInfinite => s"${jstr(k)}:$v"
+      case (k, v: Boolean) => s"${jstr(k)}:$v"
+      case (k, v) => s"${jstr(k)}:${jstr(String.valueOf(v))}"
+    }.mkString("{", ",", "}")
+
+  /** Write one record to `logDir/<runId>.json` ([[render]]ed); `runId` and
     * `completedAtMs` are appended automatically. */
   def append(spark: SparkSession, logDir: String, fields: Seq[(String, Any)],
       runId: String = java.util.UUID.randomUUID().toString): Unit = {
     val dir = new Path(logDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    val body = (fields :+ ("runId" -> runId) :+
+    val body = render(fields :+ ("runId" -> runId) :+
       ("completedAtMs" -> System.currentTimeMillis()))
-      .map {
-        case (k, v: Long) => s"${jstr(k)}:$v"
-        case (k, v: Int) => s"${jstr(k)}:$v"
-        // Double/Boolean must render as JSON values too — a quoted "0.95"
-        // under a DoubleType read schema silently reads back NULL, which
-        // for an audit trail is evidence loss. Non-finite doubles have no
-        // JSON form; they quote (and a reader wanting them numeric should
-        // not be storing NaN as evidence in the first place).
-        case (k, v: Double) if !v.isNaN && !v.isInfinite => s"${jstr(k)}:$v"
-        case (k, v: Boolean) => s"${jstr(k)}:$v"
-        case (k, v) => s"${jstr(k)}:${jstr(String.valueOf(v))}"
-      }.mkString("{", ",", "}")
     val out = fs.create(new Path(dir, s"$runId.json"), true)
     out.write(body.getBytes("UTF-8")); out.close()
   }

@@ -7,6 +7,7 @@ import graft.load._
 import graft.transform._
 import graft.validate._
 import graft.execute._
+import scala.util.control.NonFatal
 
 /** Config-driven pipelines — the analog of the reference's HOCON stage
   * documents (`%arc` cells, ArcInterpreter.scala:404-423). Cells are HOCON
@@ -54,7 +55,7 @@ object PipelineConfig {
   ): (Seq[Stage], Seq[LifecycleHook]) = {
     val root =
       try JsonMethods.parse(json)
-      catch { case _: Throwable => Hocon.parse(json, params) }
+      catch { case NonFatal(_) => Hocon.parse(json, params) }
     (parseValue(root, environment, params), parsePlugins(root \ "plugins" \ "lifecycle", environment))
   }
 
@@ -69,7 +70,7 @@ object PipelineConfig {
   ): Seq[LifecycleHook] = {
     val root =
       try JsonMethods.parse(json)
-      catch { case _: Throwable => Hocon.parse(json, params) }
+      catch { case NonFatal(_) => Hocon.parse(json, params) }
     root \ "plugins" \ "lifecycle" match {
       case JNothing => parsePlugins(root, environment)
       case nested   => parsePlugins(nested, environment)
@@ -88,7 +89,7 @@ object PipelineConfig {
   ): Seq[ConfigPlugin] = {
     val root =
       try JsonMethods.parse(json)
-      catch { case _: Throwable => Hocon.parse(json, params) }
+      catch { case NonFatal(_) => Hocon.parse(json, params) }
     val entries = root \ "plugins" \ "config" match {
       case JNothing => root
       case nested   => nested

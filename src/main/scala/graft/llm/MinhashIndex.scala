@@ -114,47 +114,25 @@ object MinhashIndex {
       if (idRange.isNullAt(1)) -1L else idRange.getLong(1), idPartitions))
   }
 
-  private case class Params(shingleLen: Int, bands: Int, rowsPerBand: Int,
+  private[llm] case class Params(shingleLen: Int, bands: Int, rowsPerBand: Int,
       maxBucketSize: Int, maxId: Long, idPartitions: Long)
 
-  /** Temp-then-rename params write (the [[SemIndex]] crash discipline): a
-    * plain overwrite deletes the old params before writing the new one — a
-    * crash in between would leave the banding parameters unreadable. */
-  private def writeParams(spark: SparkSession, path: String, p: Params): Unit = {
-    import spark.implicits._
-    graft.core.AtomicDir.swap(spark, s"$path/params") { tmp =>
-      Seq((p.shingleLen, p.bands, p.rowsPerBand, p.maxBucketSize, p.maxId,
-          p.idPartitions))
-        .toDF("shingleLen", "bands", "rowsPerBand", "maxBucketSize", "maxId",
-          "idPartitions")
-        .coalesce(1).write.mode("overwrite").json(tmp)
-    }
-  }
+  private def writeParams(spark: SparkSession, path: String, p: Params): Unit =
+    graft.core.StoreParams.write(spark, s"$path/params", Seq(
+      "shingleLen" -> p.shingleLen, "bands" -> p.bands,
+      "rowsPerBand" -> p.rowsPerBand, "maxBucketSize" -> p.maxBucketSize,
+      "maxId" -> p.maxId, "idPartitions" -> p.idPartitions))
 
-  /** Explicit schema: a schemaless json read runs a whole extra inference
-    * job per call, and queries/ingests/deletes read params once each —
-    * pure scheduler cost in the battery-shaped paths. */
-  private val paramsSchema = org.apache.spark.sql.types.StructType(
-    Seq("shingleLen", "bands", "rowsPerBand", "maxBucketSize", "maxId",
-      "idPartitions").map(
-      org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.LongType)))
-
-  private def readParams(spark: SparkSession, path: String): Params = {
-    graft.core.AtomicDir.recoverLive(spark, s"$path/params")
-    val r = spark.read.schema(paramsSchema).json(s"$path/params").head()
-    Params(
-      r.getAs[Long]("shingleLen").toInt,
-      r.getAs[Long]("bands").toInt,
-      r.getAs[Long]("rowsPerBand").toInt,
-      r.getAs[Long]("maxBucketSize").toInt,
+  private[llm] def readParams(spark: SparkSession, path: String): Params = {
+    val f = graft.core.StoreParams.read(spark, s"$path/params")
+    Params(f.int("shingleLen"), f.int("bands"), f.int("rowsPerBand"),
+      f.int("maxBucketSize"),
       // pre-watermark indexes read as -1: the first ingest then persists a
       // real maxId (ids are non-negative, so the check passes trivially once)
-      if (!r.isNullAt(r.fieldIndex("maxId"))) r.getAs[Long]("maxId") else -1L,
+      f.longOr("maxId", -1L),
       // pre-adaptive-layout stores were written with the fixed 64-way
       // pmod layout; reading them keeps that geometry
-      if (!r.isNullAt(r.fieldIndex("idPartitions")))
-        r.getAs[Long]("idPartitions") else 64L)
+      f.longOr("idPartitions", 64L))
   }
 
   /** Exact-copy matches via the fingerprint table: (new_id, corpus_id, 1.0).

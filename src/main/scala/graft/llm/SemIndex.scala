@@ -73,13 +73,7 @@ object SemIndex {
     writeParams(spark, path, tau, maxClusterSize, maxId)
   }
 
-  /** Persist params via write-temp-then-rename: a plain mode("overwrite")
-    * deletes the old params/ BEFORE writing the new one, so a crash
-    * mid-overwrite would leave params/ empty and the whole index
-    * unreadable (tau/maxClusterSize lost). With the swap, params/ holds a
-    * complete copy at every instant except the delete→rename gap, and
-    * [[readParams]] completes an interrupted swap from `params_tmp`.
-    * Remaining documented window (ingest): a crash AFTER the vectors
+  /** Documented crash window (ingest): a crash AFTER the vectors
     * append but BEFORE this call leaves a stale watermark, so re-running
     * the same batch passes the disjoint-id check against its own
     * half-landed rows. The re-run then drops every batch row against its
@@ -89,38 +83,20 @@ object SemIndex {
     * from the index itself (or rebuild) after a crashed ingest.
     */
   private def writeParams(spark: SparkSession, path: String,
-      tau: Double, maxClusterSize: Int, maxId: Long): Unit = {
-    import spark.implicits._
-    graft.core.AtomicDir.swap(spark, s"$path/params") { tmp =>
-      Seq((tau, maxClusterSize, maxId))
-        .toDF("tau", "maxClusterSize", "maxId")
-        .coalesce(1).write.mode("overwrite").json(tmp)
-    }
-  }
+      tau: Double, maxClusterSize: Int, maxId: Long): Unit =
+    graft.core.StoreParams.write(spark, s"$path/params", Seq(
+      "tau" -> tau, "maxClusterSize" -> maxClusterSize, "maxId" -> maxId))
 
   private def readCentroids(spark: SparkSession, path: String): Seq[(Double, Int, Seq[Float])] =
     spark.read.parquet(s"$path/centroids")
       .collect().map(r => (r.getDouble(1), r.getInt(0), r.getSeq[Float](2))).toSeq
       .sortBy(_._2)
 
-  /** Explicit schema — the MinhashIndex.paramsSchema rationale: no
-    * inference job per read. */
-  private val paramsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("tau",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("maxClusterSize",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("maxId",
-      org.apache.spark.sql.types.LongType)))
-
-  private def readParams(spark: SparkSession, path: String): (Double, Int, Long) = {
-    graft.core.AtomicDir.recoverLive(spark, s"$path/params")
-    val r = spark.read.schema(paramsSchema).json(s"$path/params").head()
+  private[llm] def readParams(spark: SparkSession, path: String): (Double, Int, Long) = {
+    val f = graft.core.StoreParams.read(spark, s"$path/params")
     // pre-maxId indexes (older builds) read as -1 → the disjointness check
     // passes trivially once, then the first ingest persists a real maxId
-    val maxId =
-      if (!r.isNullAt(r.fieldIndex("maxId"))) r.getAs[Long]("maxId") else -1L
-    (r.getAs[Double]("tau"), r.getAs[Long]("maxClusterSize").toInt, maxId)
+    (f.double("tau"), f.int("maxClusterSize"), f.longOr("maxId", -1L))
   }
 
   /** Batch rows that survive dedup against the index AND against each

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *   - `bloom/` — a Bloom bitmap over every indexed gram
   *     ([[BloomSketch]] layout, OR-mergeable, ≤ bits/64 rows)
   *   - `params/` — k, hashMode, nbuckets, bloom geometry, and the maxId
-  *     watermark (temp-then-rename writes, [[SemIndex]] crash discipline)
+  *     watermark ([[graft.core.StoreParams]])
   *
   * Ingest cost shape, per batch: one narrow shingle pass + explode of
   * the batch's grams (the operator's whole shuffle, O(batch)); a
@@ -48,30 +48,15 @@ object SpanIndex {
 
   private def writeParams(spark: SparkSession, path: String, k: Int,
       hashMode: String, nbuckets: Int, bits: Long, hashes: Int,
-      maxId: Long): Unit = {
-    import spark.implicits._
-    graft.core.AtomicDir.swap(spark, s"$path/params") { tmp =>
-      Seq((k, hashMode, nbuckets, bits, hashes, maxId))
-        .toDF("k", "hashMode", "nbuckets", "bits", "hashes", "maxId")
-        .coalesce(1).write.mode("overwrite").json(tmp)
-    }
-  }
-
-  /** Explicit schema — the MinhashIndex.paramsSchema rationale: no
-    * inference job per read. */
-  private val paramsSchema = org.apache.spark.sql.types.StructType(
-    org.apache.spark.sql.types.StructField("hashMode",
-      org.apache.spark.sql.types.StringType) +:
-    Seq("k", "nbuckets", "bits", "hashes", "maxId").map(
-      org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.LongType)))
+      maxId: Long): Unit =
+    graft.core.StoreParams.write(spark, s"$path/params", Seq(
+      "k" -> k, "hashMode" -> hashMode, "nbuckets" -> nbuckets,
+      "bits" -> bits, "hashes" -> hashes, "maxId" -> maxId))
 
   private def readParams(spark: SparkSession, path: String): (Int, String, Int, Long, Int, Long) = {
-    graft.core.AtomicDir.recoverLive(spark, s"$path/params")
-    val r = spark.read.schema(paramsSchema).json(s"$path/params").head()
-    (r.getAs[Long]("k").toInt, r.getAs[String]("hashMode"),
-      r.getAs[Long]("nbuckets").toInt, r.getAs[Long]("bits"),
-      r.getAs[Long]("hashes").toInt, r.getAs[Long]("maxId"))
+    val f = graft.core.StoreParams.read(spark, s"$path/params")
+    (f.int("k"), f.string("hashMode"), f.int("nbuckets"), f.long("bits"),
+      f.int("hashes"), f.long("maxId"))
   }
 
   /** Bloom bitmap swap with the params discipline: `bloom/` must never be

@@ -1380,6 +1380,81 @@ class MinhashIndexSpec extends SparkSpec {
       idField = "doc_id", textField = "text", threshold = 0.7).execute(ctx)
     assert(spark.table("mh_kept").select("doc_id").as[Long].collect().toSet == kept)
   }
+
+  test("params compatibility: Spark-written legacy params read back; driver-written params read through spark.read.json") {
+    import org.apache.commons.io.FileUtils
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+    import graft.llm.{LlmTestAccess, MinhashIndex, SemIndex, SpanIndex}
+    val base = java.nio.file.Files.createTempDirectory("mhparams").toString
+    val corpus = (0L until 40L).map(i =>
+      (i, s"doc $i unique alpha$i beta$i gamma$i delta$i epsilon$i")).toDF("doc_id", "text")
+
+    // (1) a store from before the adaptive layout and the watermark: the
+    // id tables laid out 64-way, params written by a Spark job without
+    // idPartitions or maxId
+    val legacy = s"$base/legacy"
+    MinhashIndex.write(corpus, "doc_id", "text", legacy)
+    Seq("shingles", "exact").foreach { t =>
+      spark.read.parquet(s"$legacy/$t").drop("_p")
+        .withColumn("_p", pmod(col("_id"), lit(64L)))
+        .write.partitionBy("_p").parquet(s"$legacy/${t}_64")
+      FileUtils.deleteDirectory(new java.io.File(s"$legacy/$t"))
+      FileUtils.moveDirectory(new java.io.File(s"$legacy/${t}_64"),
+        new java.io.File(s"$legacy/$t"))
+    }
+    FileUtils.deleteDirectory(new java.io.File(s"$legacy/params"))
+    Seq((3, 8, 4, 256)).toDF("shingleLen", "bands", "rowsPerBand", "maxBucketSize")
+      .coalesce(1).write.json(s"$legacy/params")
+    assert(LlmTestAccess.minhashGeometry(spark, legacy) == ((64L, -1L)))
+    // the 64-way geometry routes the delete to the right directories
+    val victims = Seq(3L, 17L, 29L)
+    val (_, shRemoved, exRemoved) = MinhashIndex.delete(spark, legacy, victims)
+    assert(shRemoved == 3L && exRemoved == 3L, s"($shRemoved, $exRemoved)")
+    Seq("bands", "shingles", "exact").foreach { t =>
+      val ids = spark.read.parquet(s"$legacy/$t").select("_id").distinct()
+        .as[Long].collect().toSet
+      assert(ids == (0L until 40L).toSet -- victims, s"$t: $ids")
+    }
+
+    // (2) params written on the driver read back through the Spark
+    // reader, under each store's schema from before the shared codec
+    def viaSpark(dir: String, fields: (String, org.apache.spark.sql.types.DataType)*) = {
+      val rows = spark.read.schema(StructType(fields.map { case (n, t) =>
+        StructField(n, t) })).json(s"$dir/params").collect()
+      assert(rows.length == 1, rows.mkString(", "))
+      rows.head
+    }
+    val mh = s"$base/mh"
+    MinhashIndex.write(corpus, "doc_id", "text", mh, bands = 6, rowsPerBand = 5)
+    val mhRow = viaSpark(mh, Seq("shingleLen", "bands", "rowsPerBand",
+      "maxBucketSize", "maxId", "idPartitions").map(_ -> LongType): _*)
+    assert(mhRow.toSeq == Seq(3L, 6L, 5L, 256L, 39L, 4L), mhRow.toString)
+    val sem = s"$base/sem"
+    val tau = 0.1 + 0.2 // 0.30000000000000004: the last bit matters
+    SemIndex.write(Seq((0L, Seq(1f, 0f)), (1L, Seq(0f, 1f))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", sem, nclusters = 2, tau = tau)
+    val semRow = viaSpark(sem, "tau" -> DoubleType, "maxClusterSize" -> LongType,
+      "maxId" -> LongType)
+    assert(java.lang.Double.doubleToRawLongBits(semRow.getDouble(0)) ==
+      java.lang.Double.doubleToRawLongBits(tau), semRow.toString)
+    assert(semRow.getLong(1) == 1024L && semRow.getLong(2) == 1L, semRow.toString)
+    val (tauBack, _, _) = LlmTestAccess.semParams(spark, sem)
+    assert(java.lang.Double.doubleToRawLongBits(tauBack) ==
+      java.lang.Double.doubleToRawLongBits(tau))
+    val span = s"$base/span"
+    SpanIndex.write(corpus, "doc_id", "text", span, k = 3, nbuckets = 8).collect()
+    val spanRow = viaSpark(span, "k" -> LongType, "hashMode" -> StringType,
+      "nbuckets" -> LongType, "bits" -> LongType, "hashes" -> LongType,
+      "maxId" -> LongType)
+    assert(spanRow.toSeq == Seq(3L, "xxhash64", 8L, 1L << 26, 5L, 39L), spanRow.toString)
+
+    // (3) anything but one object in one file fails loudly
+    Seq((3, 8, 4, 256), (3, 8, 4, 128))
+      .toDF("shingleLen", "bands", "rowsPerBand", "maxBucketSize")
+      .coalesce(1).write.mode("overwrite").json(s"$mh/params")
+    val e = intercept[IllegalArgumentException](LlmTestAccess.minhashGeometry(spark, mh))
+    assert(e.getMessage.contains("one JSON object"), e.getMessage)
+  }
 }
 
 class SketchStatsSpec extends SparkSpec {
@@ -2883,6 +2958,36 @@ class IndexCompactSpec extends SparkSpec {
       (Seq(5L, 17L) ++ (10000L until 11100L)).toDF("id")) == 2L)
     def setOf(d: String) = spark.read.parquet(d).select("id").as[Long].collect().toSet
     assert(setOf(dirA) == setOf(dirB) && !setOf(dirA).contains(5L), setOf(dirA).toString)
+  }
+
+  test("Takedown index fan-out: every store settles, every failure surfaces, the trail holds exactly the committed stores") {
+    val base = java.nio.file.Files.createTempDirectory("tdfanout").toString
+    val (mdir, sdir, semdir, ivfdir, adir) =
+      (s"$base/mh", s"$base/span", s"$base/sem", s"$base/ivf", s"$base/audit")
+    val corpus = (0L until 12L).map(i =>
+      (i, s"doc $i alpha$i beta$i gamma$i delta$i epsilon$i")).toDF("doc_id", "text")
+    graft.llm.MinhashIndex.write(corpus, "doc_id", "text", mdir)
+    graft.llm.SpanIndex.write(corpus, "doc_id", "text", sdir, k = 3, nbuckets = 4).collect()
+    // the sem and ivf stores exist for the preflight but hold no vector
+    // table: both deletes fail after the minhash and span stores commit
+    new java.io.File(semdir).mkdirs()
+    new java.io.File(ivfdir).mkdirs()
+    val e = intercept[IllegalArgumentException] {
+      graft.llm.Takedown.run(spark, Seq(2L, 5L).toDF("doc_id"),
+        minhashURI = mdir, spanURI = sdir, semURI = semdir, ivfURI = ivfdir,
+        auditURI = adir, requestId = "fanout-req")
+    }
+    // the first failure in store order, the other attached
+    assert(e.getMessage.contains(s"$semdir/vectors"), e.getMessage)
+    assert(e.getSuppressed.map(_.getMessage).toSeq.exists(_.contains(s"$ivfdir/vectors")),
+      e.getSuppressed.map(_.getMessage).mkString(" | "))
+    val trail = graft.llm.Takedown.consolidatedLog(spark, adir)
+      .filter($"request_id" === "fanout-req")
+      .select("store_type").as[String].collect().toSeq.sorted
+    assert(trail == Seq("minhash", "span"), trail.toString)
+    // and the committed stores really are clean of the ids
+    assert(spark.read.parquet(s"$mdir/exact").filter($"_id".isin(2L, 5L)).count() == 0L)
+    assert(spark.read.parquet(s"$sdir/grams").filter($"keeper".isin(2L, 5L)).count() == 0L)
   }
 }
 

@@ -1,8 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Test-side bridge to `private[llm]` internals: PropertySpec lives in
+/** Test-side bridge to `private[llm]` internals (sampling ranks, AVI
+  * parsing, store params decoders): PropertySpec lives in
   * package `graft` but pins properties of [[Sampling.rankedByHash]], the
   * shared slice-rank that underpins five samplers and the interleave.
   */
@@ -19,4 +20,12 @@ object LlmTestAccess {
     Multimodal.extractAudioBlob(bytes)
   def resampleAudioBlob(bytes: Array[Byte], targetRate: Int): (Array[Byte], String) =
     Multimodal.resampleAudioBlob(bytes, targetRate)
+  /** (idPartitions, maxId) as a MinHash store decodes its `params/`. */
+  def minhashGeometry(spark: SparkSession, path: String): (Long, Long) = {
+    val p = MinhashIndex.readParams(spark, path)
+    (p.idPartitions, p.maxId)
+  }
+  /** (tau, maxClusterSize, maxId) as a SemIndex decodes its `params/`. */
+  def semParams(spark: SparkSession, path: String): (Double, Int, Long) =
+    SemIndex.readParams(spark, path)
 }
