@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.repl.Boot
 
 /** Per-round benchmark: run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line {"metric","value","unit","queries","sf"}.
@@ -19,20 +20,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Boot.buildSession(s"local[${Boot.cpus}]")
+    // stdout must end with the one JSON line, clean of WARN chatter
     spark.sparkContext.setLogLevel("ERROR")
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // warmup: JIT + codegen + filesystem metadata
     try force(SparkEntry.queries("q01_agg_pricing_summary")(spark, sfDir))
-    catch { case _: Throwable => }
+    catch { case _: Throwable => } // harness: a failing query is reported by its timed runs
     // Optional args: run only the named queries (ad-hoc profiling).
     val selected =
       if (args.isEmpty) SparkEntry.queries
@@ -43,6 +38,7 @@ object Bench {
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { force(fn(spark, sfDir)); true } catch {
+        // harness boundary: any failure, fatal or not, marks this query "err"
         case t: Throwable =>
           System.err.println(s"[bench] query failed: ${t.getClass.getSimpleName}: ${t.getMessage}")
           false
@@ -83,6 +79,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // harness: a failed file write must not cost the stdout line below
     catch { case t: Throwable => System.err.println(s"[bench] file write failed: ${t.getMessage}") }
     // stdout gets the SHORT form: the driver tails a bounded window of a
     // verbose sbt log, and the 84-query full-name line (~3.1 KB) overflowed

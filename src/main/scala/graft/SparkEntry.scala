@@ -2531,37 +2531,29 @@ object SparkEntry {
         a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty
       val nbNow = NaiveBayes.read(spark, nbDir)
       val nbWant = NaiveBayes.train(kept, "text", "label")
-      // the ten verification aggregates are independent read-only jobs
+      // the nine verification aggregates are independent read-only jobs
       // over different tables — run them concurrently (guide §2.6) so the
       // battery's tail is bounded by the slowest check, not their sum;
       // each boolean is computed exactly as in the sequential form
-      val checkPool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      implicit val checkEc: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(checkPool)
-      val checks = try {
-        import scala.concurrent.{Await, Future}
-        val legs: Seq[(String, scala.concurrent.Future[Boolean])] = Seq(
-          "mh_bands" -> Future(clean(s"$mDir/bands", "_id")),
-          "mh_shingles" -> Future(clean(s"$mDir/shingles", "_id")),
-          "mh_exact" -> Future(clean(s"$mDir/exact", "_id")),
-          "span" -> Future(clean(s"$spDir/grams", "keeper")),
-          "sem" -> Future(clean(s"$seDir/vectors", "id")),
-          "ivf" -> Future(clean(s"$ivDir/vectors", "id")),
-          "wc" -> Future(sameTable(WordCounts.read(spark, wcDir),
-            Bpe.wordCounts(kept, "text"))),
-          "nb_tok" -> Future(sameTable(nbNow.tokenTable, nbWant.tokenTable)),
-          "nb_cls" -> Future(sameTable(nbNow.classTable, nbWant.classTable)))
-        val ok = legs.map { case (k, f) =>
-          k -> Await.result(f, scala.concurrent.duration.Duration.Inf)
-        }.toMap
-        Seq(
-          ("minhash", ok("mh_bands") && ok("mh_shingles") && ok("mh_exact")),
-          ("span", ok("span")),
-          ("sem", ok("sem")),
-          ("ivf", ok("ivf")),
-          ("wordcounts", ok("wc")),
-          ("classifier", ok("nb_tok") && ok("nb_cls")))
-      } finally checkPool.shutdown()
+      val legs: Seq[(String, () => Boolean)] = Seq(
+        "mh_bands" -> (() => clean(s"$mDir/bands", "_id")),
+        "mh_shingles" -> (() => clean(s"$mDir/shingles", "_id")),
+        "mh_exact" -> (() => clean(s"$mDir/exact", "_id")),
+        "span" -> (() => clean(s"$spDir/grams", "keeper")),
+        "sem" -> (() => clean(s"$seDir/vectors", "id")),
+        "ivf" -> (() => clean(s"$ivDir/vectors", "id")),
+        "wc" -> (() => sameTable(WordCounts.read(spark, wcDir),
+          Bpe.wordCounts(kept, "text"))),
+        "nb_tok" -> (() => sameTable(nbNow.tokenTable, nbWant.tokenTable)),
+        "nb_cls" -> (() => sameTable(nbNow.classTable, nbWant.classTable)))
+      val ok = legs.map(_._1).zip(graft.core.Par.all(8)(legs.map(_._2))).toMap
+      val checks = Seq(
+        ("minhash", ok("mh_bands") && ok("mh_shingles") && ok("mh_exact")),
+        ("span", ok("span")),
+        ("sem", ok("sem")),
+        ("ivf", ok("ivf")),
+        ("wordcounts", ok("wc")),
+        ("classifier", ok("nb_tok") && ok("nb_cls")))
       import spark.implicits._
       val checksDf = checks.toDF("store_type", "_clean")
       val logDf = Takedown.consolidatedLog(spark, auDir)

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.Executors
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
-import org.apache.spark.sql.SparkSession
+import graft.core.Par
+import graft.repl.Boot
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -19,35 +17,22 @@ object Verify {
     // (ad-hoc single-query verification; the driver passes none)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Boot.buildSession(s"local[${Boot.cpus}]")
     new java.io.File(outDir).mkdirs()
-    val pool = Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only).toMap
-    val futures = selected.toSeq.map { case (name, fn) =>
-      Future {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    Par.all(4)(selected.toSeq.map { case (name, fn) => () =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      } catch {
+        // harness boundary: one failing query must not stop oracle_sql.json
+        case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-    }
-    Await.result(Future.sequence(futures), Duration.Inf)
-    pool.shutdown()
+    })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -3,8 +3,8 @@ package graft.core
 import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 import scala.util.control.NonFatal
 
-/** Concurrent fan-out of independent tasks (store deletes, staged
-  * partition moves) that loses no failure. */
+/** Concurrent fan-out of independent tasks (store deletes, partition
+  * moves, verification checks, per-query writes) that loses no failure. */
 object Par {
 
   /** Run `tasks` on at most `parallelism` threads (inline for one task)

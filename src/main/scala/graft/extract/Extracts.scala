@@ -1,5 +1,6 @@
 package graft.extract
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, DataFrameReader}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, StringType}
@@ -314,7 +315,7 @@ final case class HTTPExtract(
       if (u.startsWith("http")) graft.core.Http.get(u)._2
       else
         try java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(u)))
-        catch { case _: Throwable => Array.emptyByteArray }
+        catch { case NonFatal(_) => Array.emptyByteArray }
 ) extends Stage {
   val stageType = "HTTPExtract"
   def execute(ctx: PipelineContext): Option[DataFrame] = {

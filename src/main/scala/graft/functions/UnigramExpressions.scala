@@ -31,10 +31,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * log-prob, `greedy_score` the log-prob of the longest-match-first
   * segmentation of the same text under the same table, and `n_fallback`
   * the number of code points that took the byte route. Both scores are
-  * LEFT-FOLD sums in document order; IEEE-754 addition is monotone, so
-  * `score >= greedy_score` holds EXACTLY (the Viterbi dp value is the
-  * left-fold of some segmentation and dominates the left-fold of every
-  * segmentation, including the greedy one) — the q192 in-band invariant.
+  * summed the same way: a left fold per word from 0.0, then the word
+  * totals left-folded in document order. IEEE-754 addition is monotone, so
+  * `score >= greedy_score` holds EXACTLY (a word's Viterbi dp value is the
+  * left fold of some segmentation and dominates the left fold of every
+  * segmentation, including the greedy one; summing dominated word totals
+  * in the same order keeps the order) — the q192 in-band invariant.
   */
 case class UnigramEncodeExpr(child: Expression, pieces: Seq[(String, Double)],
     byteScore: Double) extends UnaryExpression {
@@ -192,19 +194,22 @@ final class UnigramEncoder(pieces: Seq[(String, Double)], byteScore: Double)
       li -= 1
     }
     acc(0) += dp(n)
-    // greedy longest-match-first left fold over the same table
+    // greedy longest-match-first left fold over the same table, from 0.0
+    // like dp — so greedy <= dp(n) per word, and exactly so in the sums
+    var greedy = 0.0
     var g = 0
     while (g < n) {
       var len = math.min(maxPieceLen, n - g)
       var matched = 0
       while (len >= 1 && matched == 0) {
         val e = table.get(new String(cps, g, len))
-        if (e != null) { acc(1) += e(1); matched = len }
+        if (e != null) { greedy += e(1); matched = len }
         len -= 1
       }
-      if (matched == 0) { acc(1) += utf8Len(cps(g)) * byteScore; matched = 1 }
+      if (matched == 0) { greedy += utf8Len(cps(g)) * byteScore; matched = 1 }
       g += matched
     }
+    acc(1) += greedy
   }
 
   def encode(s: UTF8String): InternalRow = {

@@ -593,22 +593,15 @@ object IvfIndex {
     // actions (centroid read, probed-list collect, query pin) — construct
     // the settings concurrently (guide §2.6) so those tiny jobs overlap
     // instead of serializing; the frames themselves are unchanged.
-    val buildPool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, settings.size))
-    implicit val buildEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(buildPool)
-    val tagged = try {
-      settings.zipWithIndex.map { case (s, i) =>
-        scala.concurrent.Future((s.mode match {
-          case "pq" => topKPq(sampleQueries, queryId, queryVec, path, k, s.nprobe,
-            s.shortlistFactor)
-          case "sq8" => topKQuantized(sampleQueries, queryId, queryVec, path, k, s.nprobe,
-            s.shortlistFactor)
-          case _ => topK(sampleQueries, queryId, queryVec, path, k, s.nprobe)
-        }).select(col("query_id"), col("neighbor_id")).withColumn("_si", lit(i)))
-      }.map(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf)).reduce(_ unionByName _)
-    } finally buildPool.shutdown()
+    val tagged = graft.core.Par.all(4)(settings.zipWithIndex.map { case (s, i) => () =>
+      (s.mode match {
+        case "pq" => topKPq(sampleQueries, queryId, queryVec, path, k, s.nprobe,
+          s.shortlistFactor)
+        case "sq8" => topKQuantized(sampleQueries, queryId, queryVec, path, k, s.nprobe,
+          s.shortlistFactor)
+        case _ => topK(sampleQueries, queryId, queryVec, path, k, s.nprobe)
+      }).select(col("query_id"), col("neighbor_id")).withColumn("_si", lit(i))
+    }).reduce(_ unionByName _)
     val hitCounts = tagged
       .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("_si").agg(count(lit(1)).as("_n"))

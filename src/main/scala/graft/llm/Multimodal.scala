@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Multimodal column model: image/audio/video travel as opaque `binary`
   * columns with a typed metadata struct alongside. Decode / feature-extract /
@@ -126,7 +127,7 @@ object Multimodal {
             Integer.valueOf(f.getChannels), bins))
         }
       } finally ais.close()
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Decode a blob: REAL for JDK-supported images (PNG/JPEG/GIF/BMP via
     * ImageIO — true dimensions + 8-bin luminance histogram), REAL for
@@ -196,7 +197,7 @@ object Multimodal {
             if (n > 0) { var i = 0; while (i < 8) { bins(i) /= n; i += 1 } }
             Some((w, h, bins))
           }
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
     real.getOrElse((-1, -1, Array.empty[Float]))
   }
 
@@ -247,7 +248,7 @@ object Multimodal {
             javax.imageio.ImageIO.write(out, "png", bos)
             Some(bos.toByteArray)
           }
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
     real.map((_, "image/png")).getOrElse {
       // STUB(no audio/video codecs): deterministic area-proportional payload
       val targetLen = math.max(1, (tw * th) / 64)
@@ -381,7 +382,7 @@ object Multimodal {
           (out, "ok")
         }
       } finally ais.close()
-    } catch { case _: Throwable => (null, "unsupported") }
+    } catch { case NonFatal(_) => (null, "unsupported") }
 
   /** Resample + mono-mix audio blobs to `targetRate` (see
     * [[resampleAudioBlob]]). Output: input columns + `audio_resampled`
@@ -431,6 +432,11 @@ object Multimodal {
   private def u16le(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
 
+  /** Deepest LIST nesting the AVI walkers accept: real files nest 2–3
+    * deep, and each level costs a crafted file only 12 bytes, so an
+    * unbounded walk would overflow the stack instead of returning None. */
+  private val MaxListDepth = 64
+
   /** Minimal RIFF/AVI reader (pure JDK — the MJPEG case needs no codec
     * beyond ImageIO's JPEG support): walks the chunk tree, takes
     * dimensions/frame-count from the `avih` main header and the frame
@@ -457,7 +463,7 @@ object Multimodal {
       var vidsPrefix: String = null // f"%02d" index of the FIRST vids stream
       var bad = false
       val ranges = Vector.newBuilder[(Int, Int)]
-      def walk(start: Int, end: Int): Unit = {
+      def walk(start: Int, end: Int, depth: Int): Unit = {
         var off = start
         while (!bad && off + 8 <= end) {
           val id = fourcc(bytes, off)
@@ -467,8 +473,8 @@ object Multimodal {
           if (dataEndL > end) { bad = true; return }
           val dataEnd = dataEndL.toInt
           if (id == "LIST") {
-            if (sz < 4) { bad = true; return }
-            walk(dataStart + 4, dataEnd)
+            if (sz < 4 || depth >= MaxListDepth) { bad = true; return }
+            walk(dataStart + 4, dataEnd, depth + 1)
           } else if (id == "avih") {
             if (sz < 40) { bad = true; return }
             uspf = u32le(bytes, dataStart)
@@ -503,11 +509,11 @@ object Multimodal {
         // chunk carries its pad byte per the RIFF rules)
         if (!bad && off != end) bad = true
       }
-      walk(12, bytes.length)
+      walk(12, bytes.length, 0)
       val uspfFinal = if (strhUspf > 0) strhUspf else uspf
       if (bad || width <= 0 || height <= 0 || total < 0 || uspfFinal <= 0) None
       else Some(AviVideo(width, height, total, uspfFinal, ranges.result()))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Parsed audio track of an AVI: WAVEFORMATEX fields from the first
     * `auds` stream's `strf` plus the byte ranges of its `NNwb` chunks
@@ -536,7 +542,7 @@ object Multimodal {
       var bits = -1
       var chunkId: String = null
       val ranges = Vector.newBuilder[(Int, Int)]
-      def walk(start: Int, end: Int): Unit = {
+      def walk(start: Int, end: Int, depth: Int): Unit = {
         var off = start
         while (!bad && off + 8 <= end) {
           val id = fourcc(bytes, off)
@@ -546,8 +552,8 @@ object Multimodal {
           if (dataEndL > end) { bad = true; return }
           val dataEnd = dataEndL.toInt
           if (id == "LIST") {
-            if (sz < 4) { bad = true; return }
-            walk(dataStart + 4, dataEnd)
+            if (sz < 4 || depth >= MaxListDepth) { bad = true; return }
+            walk(dataStart + 4, dataEnd, depth + 1)
           } else if (id == "strh") {
             if (sz < 28) { bad = true; return }
             lastWasAuds = audioIdx < 0 && fourcc(bytes, dataStart) == "auds"
@@ -570,10 +576,10 @@ object Multimodal {
         }
         if (!bad && off != end) bad = true
       }
-      walk(12, bytes.length)
+      walk(12, bytes.length, 0)
       if (bad || audioIdx < 0 || fmtTag < 0) None
       else Some(AviAudio(audioIdx, fmtTag, nch, rate, bits, ranges.result()))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Extract an AVI's PCM audio track as a standalone WAV blob — the
     * bridge from the video container to the ENTIRE audio pipeline
@@ -798,7 +804,7 @@ object Multimodal {
           // keep the source timing EXACTLY: the header's frame duration in
           // microseconds carries over as-is (fps-representable or not)
           (buildMjpegAviUspf(out, tw, th, v.microSecPerFrame), "transcoded")
-        } catch { case _: Throwable => (bytes, "frame_decode_failed") }
+        } catch { case NonFatal(_) => (bytes, "frame_decode_failed") }
     }
 
   /** Transcode MJPEG-in-AVI clips to target dimensions — the video dual

@@ -44,14 +44,19 @@ object Boot {
       case None => StorageLevel.MEMORY_AND_DISK_SER
     }
 
-  /** Build (or rebuild after `%conf master=`) the REPL session. */
+  /** Local parallelism shared by every session's master and shuffle
+    * partitions: `SPARK_GRAFT_CPUS`, else the machine's processor count. */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  /** Build (or rebuild after `%conf master=`) the session — the only place
+    * a SparkSession is built, for the REPL, the mains and the tools. */
   def buildSession(master: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft-repl")
       .config("spark.driver.maxResultSize", s"${(runtimeMemory * 0.8).toLong}B")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")

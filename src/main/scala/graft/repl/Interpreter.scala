@@ -90,6 +90,7 @@ final class Interpreter(initialSpark: SparkSession) {
     val (result, progress) = ProgressListener.withProgress(spark) {
       try dispatch(magic, args, argLine, body)
       catch {
+        // harness boundary: any failure, fatal or not, ends as this cell's error
         case e: Throwable =>
           // Secrets never echo, including through error text: a failing SQL
           // cell would otherwise reflect an injected ${secret} verbatim.

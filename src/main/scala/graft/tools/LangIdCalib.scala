@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.repl.Boot
 
 /** Calibration probe for the language-ID `und` confidence floor: for a
   * grid of document-profile caps, prints the normalized out-of-place
@@ -99,9 +99,7 @@ object LangIdCalib {
       println(f"  cutoff search: A=$bestA%.3f R=$bestR%.3f worstMargin=$bestM%.4f")
 
       if (args.nonEmpty) {
-        val spark = SparkSession.builder().master("local[8]")
-          .config("spark.sql.shuffle.partitions", "8")
-          .config("spark.ui.enabled", "false").getOrCreate()
+        val spark = Boot.buildSession(s"local[${Boot.cpus}]")
         spark.sparkContext.setLogLevel("ERROR")
         import org.apache.spark.sql.functions._
         val docs = spark.read.parquet(s"${args(0)}/documents.parquet")

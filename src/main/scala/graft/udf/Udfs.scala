@@ -1,5 +1,6 @@
 package graft.udf
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Literal, Rand}
 import org.json4s._
@@ -20,6 +21,7 @@ object Udfs {
     if (json == null || path == null) return None
     val parsed =
       try JsonMethods.parse(json)
+      // Throwable, not NonFatal: a too-deep JSON input overflows the stack and must read as None
       catch { case _: Throwable => return None }
     val tokens = path.stripPrefix("$").split("""[.\[\]]+""").filter(_.nonEmpty)
     tokens.foldLeft(Option(parsed)) {
@@ -77,7 +79,7 @@ object Udfs {
         try {
           if (uri.startsWith("http")) graft.core.Http.get(uri)._2
           else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(uri)))
-        } catch { case _: Throwable => null }
+        } catch { case NonFatal(_) => null }
     )
     // STUB(offline): like get_uri but for a glob — returns the bytes of every
     // matching local file, sorted by path for determinism (the reference
@@ -99,7 +101,7 @@ object Udfs {
               .map(java.nio.file.Files.readAllBytes)
               .toArray
           } finally stream.close()
-        } catch { case _: Throwable => null }
+        } catch { case NonFatal(_) => null }
     )
     spark.udf.register(
       "struct_keys",

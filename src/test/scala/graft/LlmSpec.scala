@@ -3623,6 +3623,22 @@ class UnigramSpec extends SparkSpec {
     val m = Unigram.trainFromCounts(Seq(("ab", 3L)), vocabSize = 5)
     assert(m.pieces.forall(_._3 > m.byteScore), (m.pieces, m.byteScore).toString)
   }
+
+  test("score >= greedy_score holds exactly when piece sums round differently across words") {
+    import org.apache.spark.unsafe.types.UTF8String
+    // "w xy": greedy and Viterbi pick the same pieces w | x y, and
+    // (w + x) + y rounds above w + (x + y): adding the greedy pieces to the
+    // document total one by one puts greedy_score an ulp above the score
+    val (w, x, y) = (-1.0, -1e-16, -1e-16)
+    assert((w + x) + y > w + (x + y))
+    val row = new graft.functions.UnigramEncoder(Seq("w" -> w, "x" -> x, "y" -> y), -10.0)
+      .encode(UTF8String.fromString("w xy"))
+    assert(row.getArray(0).toSeq[UTF8String](org.apache.spark.sql.types.StringType)
+      .map(_.toString) == Seq("w", "x", "y"))
+    val (score, greedy) = (row.getDouble(2), row.getDouble(3))
+    assert(score >= greedy, s"score $score < greedy_score $greedy")
+    assert(score == greedy)
+  }
 }
 
 class NaiveBayesSpec extends SparkSpec {

@@ -648,6 +648,31 @@ class PropertySpec extends AnyFunSuite {
     assert(graft.llm.LlmTestAccess.parseAvi(huge).isEmpty)
   }
 
+  test("AVI parsers reject deeply nested LIST chunks as None, not a stack overflow") {
+    // 50,000 LISTs nested inside each other, each tiling its parent
+    // exactly: 600 KB, structurally valid RIFF apart from the depth
+    val depth = 50000
+    val buf = java.nio.ByteBuffer.allocate(12 + 12 * depth)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def tag(s: String) = buf.put(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    tag("RIFF"); buf.putInt(buf.capacity - 8); tag("AVI ")
+    (0 until depth).foreach { i =>
+      tag("LIST"); buf.putInt(buf.capacity - (12 + 12 * i) - 8); tag("movi")
+    }
+    val nested = buf.array
+    // a small stack makes the overflow certain for an unbounded walk
+    var results: Seq[Boolean] = Nil
+    var error: Throwable = null
+    val t = new Thread(null, () =>
+      try results = Seq(graft.llm.LlmTestAccess.parseAvi(nested).isEmpty,
+        graft.llm.LlmTestAccess.parseAviAudio(nested).isEmpty,
+        graft.llm.LlmTestAccess.extractAudioBlob(nested)._2 == "unsupported")
+      catch { case e: Throwable => error = e }, "avi-nesting", 512L * 1024)
+    t.start(); t.join()
+    assert(error == null, s"parser threw $error")
+    assert(results == Seq(true, true, true))
+  }
+
   test("per-line mojibake repair inverts independent per-line mangling exactly") {
     import org.apache.spark.unsafe.types.UTF8String
     val fixer = new graft.functions.MojibakeFixer(3, perLine = true)
